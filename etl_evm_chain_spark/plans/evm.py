@@ -331,8 +331,8 @@ LIMIT 25
 # Q95: dynamic ABI type decode (string + uint32[] tails, offset-based
 # head/tail layout) — the reference decodes these via go-ethereum
 # `abi.UnpackIntoMap` (`internal/parser/parser.go:74-77`); here the
-# whole decode is native offset arithmetic on the hex blob
-# (sources/abi.py `_decode_dynamic`), no Python in the path. Both
+# whole decode is native offset arithmetic on the unhexed data blob
+# (sources/abi.py `_decode_dyn_at`), no Python in the path. Both
 # engines synthesize the SAME ABI-encoded Memo logs from lineitem,
 # then decode independently (Spark: the real decoder; DuckDB: SQL
 # substr/unhex/list_transform on the read-back offsets), so values

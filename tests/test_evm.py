@@ -52,6 +52,37 @@ def test_abi_parse_and_schema():
     assert "value" in names and "value_hex" in names  # dual-column uint256
 
 
+def test_parse_abi_keeps_overloaded_events(spark):
+    """Every overload survives: later ones are named Transfer0,
+    Transfer1, ... (go-ethereum abi.ResolveNameConflict) while their
+    signature and topic0 keep the declared name."""
+    def transfer(*extra):
+        return {"type": "event", "name": "Transfer", "inputs": [
+            {"name": "from", "type": "address", "indexed": True},
+            {"name": "to", "type": "address", "indexed": True},
+            {"name": "value", "type": "uint256", "indexed": False},
+            *extra]}
+
+    events = parse_abi([
+        transfer(),
+        transfer({"name": "data", "type": "bytes", "indexed": False}),
+        transfer({"name": "memo", "type": "string", "indexed": False}),
+    ])
+    assert list(events) == ["Transfer", "Transfer0", "Transfer1"]
+    erc20, erc223, memo = events.values()
+    assert erc20.topic0 == TRANSFER_TOPIC0
+    assert erc223.name == "Transfer0"
+    assert erc223.signature == "Transfer(address,address,uint256,bytes)"
+    assert memo.signature == "Transfer(address,address,uint256,string)"
+    assert erc223.topic0 == keccak256_hex(erc223.signature)
+    assert len({ev.topic0 for ev in events.values()}) == 3
+    raw = spark.createDataFrame(
+        [_mklog([ev.topic0], [], block=i)
+         for i, ev in enumerate(events.values())], RAW_LOG_SCHEMA)
+    routed = route_events(raw, events).orderBy("block_number").collect()
+    assert [r["event_name"] for r in routed] == list(events)
+
+
 SWAPISH = AbiEvent("Swapish", (
     AbiInput("sender", "address", True),
     AbiInput("amount", "uint256", False),
@@ -90,6 +121,32 @@ def test_decode_uint256_fits_decimal(spark):
     out = decode_event(df, SWAPISH).collect()[0]
     assert int(out["amount"]) == v
     assert out["tick"] == 5
+
+
+def test_static_event_plan_reads_data_only_as_string(spark, tmp_path):
+    """An event whose data holds only static scalars decodes straight
+    off the hex string: its optimized plan never unhexes the blob and
+    every read of ``data`` is a substring of the string column."""
+    import re
+
+    ev = AbiEvent("Static", (
+        AbiInput("owner", "address", True),
+        AbiInput("amount", "uint256", False),
+        AbiInput("delta", "int256", False),
+        AbiInput("tick", "int24", False),
+    ))
+    path = str(tmp_path / "raw")
+    spark.createDataFrame([_mklog([ev.topic0, "0x" + _word(1)],
+                                  [_word(2), _word(-3), _word(-4)])],
+                          RAW_LOG_SCHEMA).write.parquet(path)
+    decoded = decode_event(spark.read.parquet(path), ev)
+    plan = decoded._jdf.queryExecution().optimizedPlan().toString()
+    assert "unhex" not in plan and "__abi_bin" not in plan
+    body = "\n".join(ln for ln in plan.splitlines() if "Relation" not in ln)
+    reads = re.findall(r"(\S*)data#\d+", body)
+    assert reads and all(r.endswith("substring(") for r in reads), reads
+    row = decoded.collect()[0]
+    assert (row["amount"], row["delta"], row["tick"]) == (2, -3, -4)
 
 
 def test_topic_filter_drops_foreign_events(spark):
@@ -537,8 +594,14 @@ def _spec_encode_one(inp, v) -> tuple[str, str | None]:
     m = _re.match(r"^(.*)\[(\d*)\]$", t)
 
     def is_dyn(i):
-        from etl_evm_chain_spark.sources.abi import _is_dynamic_i
-        return _is_dynamic_i(i)
+        # ABI-spec dynamism, independent of the decoder's own helper
+        mi = _re.match(r"^(.*)\[(\d*)\]$", i.type)
+        if mi:
+            return mi.group(2) == "" or is_dyn(
+                AbiInput(i.name, mi.group(1), False, i.components))
+        if i.type == "tuple":
+            return any(is_dyn(c) for c in i.components)
+        return i.type in ("string", "bytes")
 
     if t == "string":
         b = v.encode("utf-8")
@@ -1027,7 +1090,7 @@ def test_fixed_ufixed_rejected_loudly(spark):
     for t in ("fixed", "ufixed", "fixed128x18", "ufixed128x18",
               "fixed128x18[2]", "ufixed[]"):
         with pytest.raises(NotImplementedError, match="reserved"):
-            spark_type(t)
+            spark_type(AbiInput("x", t, False))
     ev = AbiEvent("Bad", (AbiInput("x", "ufixed128x18", False),))
     log = _mklog([ev.topic0], [_word(1)])
     df = spark.createDataFrame([log], RAW_LOG_SCHEMA)
