@@ -53,12 +53,24 @@ def consensus_price_grid(spark: SparkSession, glob_path: str,
 def meanrevert(spark: SparkSession, glob_path: str,
                params: MeanRevertParams = MeanRevertParams()
                ) -> tuple[DataFrame, DataFrame]:
-    """Full backtest; returns (trades, monthly_report)."""
+    """Full backtest; returns (trades, monthly_report).
+
+    The backtest runs once, inside this call: ``trades`` is a local
+    checkpoint, and ``monthly`` is derived from it, so collecting both
+    reads the stored trades instead of re-running CSV → grid → FSM.
+    A checkpoint, not ``cache()``: the cache matches later calls by
+    plan, and would hand a long-lived session stale trades after the
+    CSVs change.
+    """
+    if params.mode not in ("pct", "zscore"):
+        raise ValueError(f"unknown meanrevert mode {params.mode!r}; "
+                         "expected 'pct' or 'zscore'")
     grid = consensus_price_grid(spark, glob_path, params.freq_s)
     # inner-join semantics of the reference's merge fold: only buckets
-    # where every pool has a value
-    n_pools = grid.select("pool").distinct().count()
-    grid = grid.filter(F.col("n_pools") == n_pools)
+    # where every pool has a value (a one-row broadcast join keeps the
+    # pool count inside the plan instead of an extra job)
+    pools = grid.agg(F.count_distinct("pool").alias("n_pools"))
+    grid = grid.join(F.broadcast(pools), "n_pools")
     if params.mode == "pct":
         dev = (F.col("price") / F.col("consensus") - 1) * 100
         g = grid.withColumn("dev", dev)
@@ -75,6 +87,7 @@ def meanrevert(spark: SparkSession, glob_path: str,
             g, pool="pool", ts="bucket_ts", price="price", z="z",
             entry_z=params.entry_z, exit_z=params.exit_z,
             max_hold=params.max_hold)
+    trades = trades.localCheckpoint()
     return trades, bt.calendar_returns(trades)
 
 

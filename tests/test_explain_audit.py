@@ -128,3 +128,30 @@ def test_cached_scan_flagged_on_cached_plan(spark):
         assert "cached_scan" not in ea.df_flags(other.groupBy("v").count())
     finally:
         df.unpersist()
+
+
+def _series(spark):
+    return spark.range(3000).select((F.col("id") % 3).alias("k"),
+                                    F.col("id").alias("t"),
+                                    (F.col("id") * 0.5).alias("x"))
+
+
+def test_wide_sliding_frame_flagged(spark):
+    w = Window.partitionBy("k").orderBy("t").rowsBetween(-1439, 0)
+    bad = _series(spark).withColumn("m", F.avg("x").over(w))
+    assert "wide_sliding_frame" in ea.df_flags(bad)
+
+
+def test_no_wide_sliding_frame_on_running_lag_or_rolling_kernel(spark):
+    from etl_evm_chain_spark.functions.timeseries import rolling_mean_std
+
+    df = _series(spark)
+    w = Window.partitionBy("k").orderBy("t")
+    quiet = [
+        df.withColumn("c", F.sum("x").over(w.rowsBetween(Window.unboundedPreceding, 0))),
+        df.withColumn("l", F.lag("x", 1440).over(w)),
+        df.withColumn("m", F.avg("x").over(w.rowsBetween(-29, 0))),
+        rolling_mean_std(df, value="x", key="k", order="t", n=1440),
+    ]
+    for q in quiet:
+        assert "wide_sliding_frame" not in ea.df_flags(q)

@@ -11,9 +11,14 @@ import urllib.request
 
 import pytest
 
+from pyspark.sql import Window
+from pyspark.sql import functions as F
+
+from etl_evm_chain_spark.operators import backtest as bt
 from etl_evm_chain_spark.pipelines import (
     FeeMlParams,
     MeanRevertParams,
+    consensus_price_grid,
     fee_ml,
     meanrevert,
 )
@@ -68,6 +73,53 @@ def test_meanrevert_pipeline_both_modes(spark, tmp_path):
         freq_s=60, mode="pct", threshold=0.2))
     for r in trades_p.collect():
         assert r["side"] in ("long", "short")
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_meanrevert_runs_backtest_once(spark, tmp_path):
+    glob = _write_swap_csvs(tmp_path)
+    params = MeanRevertParams(freq_s=60, mode="zscore", lookback=30,
+                              entry_z=1.5, exit_z=0.5, max_hold=200)
+    trades, monthly = meanrevert(spark, glob, params)
+    # both outputs read the stored trades: no FSM or window to re-run
+    for df in (trades, monthly):
+        plan = _optimized(df)
+        assert "FlatMapGroupsInPandas" not in plan and "Window" not in plan, plan
+
+    # the same trades as the FSM fed with the sliding-frame z-score
+    grid = consensus_price_grid(spark, glob, params.freq_s)
+    n_pools = grid.select("pool").distinct().count()
+    g = grid.filter(F.col("n_pools") == n_pools) \
+        .withColumn("dev", F.col("price") - F.col("consensus"))
+    w = Window.partitionBy("pool").orderBy("bucket_ts") \
+        .rowsBetween(-(params.lookback - 1), 0)
+    full = F.count("dev").over(w) >= params.lookback
+    g = g.withColumn("m", F.when(full, F.avg("dev").over(w))) \
+        .withColumn("s", F.when(full, F.stddev_pop("dev").over(w))) \
+        .withColumn("z", F.when(F.col("s") != 0, (F.col("dev") - F.col("m")) / F.col("s")))
+    want = bt.meanrevert_fsm_zscore(
+        g, pool="pool", ts="bucket_ts", price="price", z="z",
+        entry_z=params.entry_z, exit_z=params.exit_z, max_hold=params.max_hold)
+
+    def rows(df):
+        return sorted((r["pool"], r["entry_ts"], r["exit_ts"], r["side"],
+                       r["entry_price"], r["exit_price"], r["held_rows"],
+                       r["entry_z"], r["exit_z"]) for r in df.collect())
+
+    got, ref = rows(trades), rows(want)
+    assert len(got) == len(ref) > 0
+    for a, b in zip(got, ref):
+        assert a[:7] == b[:7]
+        assert a[7:] == pytest.approx(b[7:], rel=1e-9)
+
+
+def test_meanrevert_rejects_unknown_mode(spark, tmp_path):
+    glob = _write_swap_csvs(tmp_path)
+    with pytest.raises(ValueError, match="'pct' or 'zscore'"):
+        meanrevert(spark, glob, MeanRevertParams(mode="zcore"))
 
 
 def test_fee_ml_pipeline(spark, tmp_path):

@@ -27,6 +27,12 @@ flags scale red-flags:
   bands, cells) are unknowable from the plan text and skip the check
   — the two-phase ranking kit exists precisely to put a derived
   high-cardinality key next to the low one.
+- Window with a ROWS frame of two finite bounds spanning at least
+  WIDE_FRAME_MIN rows (``rowsBetween(-1439, 0)``): Spark's sliding
+  frame re-aggregates the whole frame for every output row, so the
+  cost is O(rows × width). Running frames, whole-partition frames and
+  lag/lead (a one-row frame) stay quiet; ``rolling_mean_std`` shows
+  the O(rows) form of a trailing-window statistic.
 
 Usage: python tools/explain_audit.py [sf_dir] [query ...]
 Exit 1 if an unexpected red flag appears (ALLOW list documents the
@@ -317,6 +323,13 @@ _WSD = re.compile(r"windowspecdefinition\(")
 # resolve and skip the check.
 LOW_CARD_MAX = 1000
 
+# A sliding ROWS frame at least this wide is flagged: narrower frames
+# (the n=30 rolling queries, 12-row label horizons) cost little per row.
+WIDE_FRAME_MIN = 64
+
+_BOUND = r"(-?\d+|currentrow\$\(\))"
+_ROW_FRAME = re.compile(rf"specifiedwindowframe\(RowFrame, {_BOUND}, {_BOUND}\)")
+
 # Base tables whose column cardinalities seed the low-card check.
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
@@ -434,9 +447,19 @@ def column_cardinalities(spark, sf_dir: str) -> dict[str, int]:
     return card
 
 
+def _row_frame_widths(plan: str):
+    """Width in rows of every ROWS frame with two finite bounds."""
+    for lo, hi in _ROW_FRAME.findall(plan):
+        lo, hi = (0 if b.startswith("currentrow") else int(b) for b in (lo, hi))
+        yield hi - lo + 1
+
+
 def window_flags(plan: str, card: dict[str, int] | None) -> set[str]:
-    """global_window / low_card_window flags for a formatted plan."""
+    """global_window / low_card_window / wide_sliding_frame flags for a
+    formatted plan."""
     found: set[str] = set()
+    if any(w >= WIDE_FRAME_MIN for w in _row_frame_widths(plan)):
+        found.add("wide_sliding_frame")
     for parts in _window_partition_specs(plan):
         if not parts:
             found.add("global_window")
