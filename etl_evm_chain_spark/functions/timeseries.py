@@ -173,9 +173,9 @@ def rolling_mean_std(df: DataFrame, *, value: str, key: str | None, order: str,
     n ∈ {30, 300, 1440} (the sliding-frame aggregates: 3e-15 and 2e-12),
     and a walk at level 1e9 with 1e-3 steps 1e-16 and 1e-15 (sliding
     frame: 1e-4 on ``std``). A window whose non-null values are all
-    equal gets exactly ``0.0`` for ``std`` and that value for ``mean``
-    (every shifted value is 0), as the sliding-frame aggregates do. The
-    worst case is a nearly constant window whose shift is a far value:
+    equal gets exactly ``0.0`` for ``std``, as Spark's sliding-frame
+    ``stddev_pop`` does, and exactly that value for ``mean``: every
+    shifted value is 0. The worst case is a nearly constant window whose shift is a far value:
     0.1 ± 1e-9 noise with 1e9 spikes, one opening a block, measured 5e-12
     relative on ``mean`` and 1.3e-12 on ``std`` at n = 1440, since the
     sums then run at the spike's magnitude.

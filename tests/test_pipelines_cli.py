@@ -10,10 +10,9 @@ import random
 import urllib.request
 
 import pytest
-
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from etl_evm_chain_spark.functions.timeseries import zscore
 from etl_evm_chain_spark.operators import backtest as bt
 from etl_evm_chain_spark.pipelines import (
     FeeMlParams,
@@ -23,6 +22,7 @@ from etl_evm_chain_spark.pipelines import (
     meanrevert,
 )
 from etl_evm_chain_spark.sources.csv_source import read_swap_csvs
+from tests.test_timeseries_kit import _sliding
 
 
 def _write_swap_csvs(tmp_path):
@@ -94,12 +94,9 @@ def test_meanrevert_runs_backtest_once(spark, tmp_path):
     n_pools = grid.select("pool").distinct().count()
     g = grid.filter(F.col("n_pools") == n_pools) \
         .withColumn("dev", F.col("price") - F.col("consensus"))
-    w = Window.partitionBy("pool").orderBy("bucket_ts") \
-        .rowsBetween(-(params.lookback - 1), 0)
-    full = F.count("dev").over(w) >= params.lookback
-    g = g.withColumn("m", F.when(full, F.avg("dev").over(w))) \
-        .withColumn("s", F.when(full, F.stddev_pop("dev").over(w))) \
-        .withColumn("z", F.when(F.col("s") != 0, (F.col("dev") - F.col("m")) / F.col("s")))
+    g = _sliding(g, value="dev", key="pool", order="bucket_ts", n=params.lookback,
+                 min_periods=params.lookback, ddof=0) \
+        .withColumn("z", zscore("dev", "roll_mean", "roll_std"))
     want = bt.meanrevert_fsm_zscore(
         g, pool="pool", ts="bucket_ts", price="price", z="z",
         entry_z=params.entry_z, exit_z=params.exit_z, max_hold=params.max_hold)

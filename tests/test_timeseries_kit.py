@@ -164,8 +164,8 @@ def test_rolling_mean_std_unkeyed(spark):
 
 
 def test_rolling_mean_std_constant_runs_are_exact_zero(spark):
-    # constant runs far from the block's first value, after a jump,
-    # across block edges: std must be exactly 0.0 and z null
+    # constant runs right after a jump and across block edges: std
+    # must be exactly 0.0 and z null
     series = {"k": [0.1] * 7 + [1e9] * 11 + [0.1 + 1e-12] * 9 + [3.3] * 25}
     for n in (2, 5, 8):
         _assert_rolling_matches(spark, series, n=n, min_periods=n, ddof=0)
